@@ -43,7 +43,7 @@ object Bench {
     else sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-spark-local"
   }
 
-  def session(cpus: Int): SparkSession = {
+  private def session(cpus: Int): SparkSession = {
     val s = SparkSession
       .builder()
       .master(s"local[$cpus]")
@@ -62,8 +62,8 @@ object Bench {
     s
   }
 
-  /** Wall-clock a thunk — shared by all bench mains. */
-  def time[A](f: => A): (A, Double) = {
+  /** Wall-clock a thunk. */
+  private def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = f
     (a, (System.nanoTime() - t0) / 1e9)
@@ -72,7 +72,7 @@ object Bench {
   /** A parquet dataset is reusable only if its _SUCCESS marker exists — a
     * killed writer leaves the directory behind, and benching against a
     * partial corpus would silently record wrong numbers. */
-  def parquetComplete(path: String): Boolean =
+  private def parquetComplete(path: String): Boolean =
     new java.io.File(path, "_SUCCESS").exists()
 
   /** The measured KG job: read transcripts parquet -> stable ordering ->

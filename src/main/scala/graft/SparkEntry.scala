@@ -95,11 +95,20 @@ object SparkEntry {
     * partition (a dictionary-grain artifact cached as 128 near-empty
     * blocks cost each consumer a 128-task scan stage). The production
     * analog is output file sizing on the artifact write (guide §6); a
-    * corpus-scale artifact keeps its full partitioning. */
-  private def compactArtifact(df: DataFrame): DataFrame = {
+    * corpus-scale artifact keeps its full partitioning. A re-laid-out
+    * artifact drops the first checkpoint's blocks once the compact copy
+    * has materialized, so the application holds one copy, not two. */
+  private[graft] def compactArtifact(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
     val ck = df.localCheckpoint()
+    val ckIds = sc.getPersistentRDDs.keySet.toSet -- before
     val p = partsFor(ck.sparkSession, ck.count())
-    if (p * 2 <= ck.rdd.getNumPartitions) ck.repartition(p).localCheckpoint() else ck
+    if (p * 2 <= ck.rdd.getNumPartitions) {
+      val compact = ck.repartition(p).localCheckpoint()
+      ckIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      compact
+    } else ck
   }
 
   /** Same posture for the co-occurrence edge list (the KG's weighted edge
@@ -165,9 +174,10 @@ object SparkEntry {
   }
 
   /** MinHash signature index over the full corpus — in production a
-    * PERSISTED artifact of a corpus epoch (DedupBench measures exactly that
-    * build + persist); every LSH consumer (pair query, clustering) probes
-    * the same index rather than re-hashing the corpus. */
+    * PERSISTED artifact of a corpus epoch (its 1M-doc build + persist is
+    * recorded in BENCH/BASELINE.md §Dedup at scale); every LSH consumer
+    * (pair query, clustering) probes the same index rather than re-hashing
+    * the corpus. */
   private val sigCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
   private def minhashSigs(s: SparkSession, dir: String): DataFrame =
@@ -571,7 +581,8 @@ object SparkEntry {
     // verified pair set equals the all-pairs truth on any corpus (the
     // sf1-equivalent sweep surfaced the classic S-curve recall gap of the
     // production (8,4) banding: 2527/3144 pairs at j in [0.5, 0.8); (8,4)
-    // stays the benched production default in DedupBench, 5x cheaper)
+    // stays the production default, 5x cheaper — BENCH/BASELINE.md §Dedup
+    // at scale)
     "dedup_minhash" -> ((s, dir) => {
       val d = docs(s, dir)
       Dedup

@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare in tools/check_oracle.py. A query
+  * that throws does not stop the dump; once everything else is written the
+  * main exits non-zero with one line naming every failed query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [only] — `only` is a comma-separated query-name
@@ -19,12 +21,12 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.nonEmpty && !only(name)) ()
-      else try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      if (only.nonEmpty && !only(name)) None
+      else try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -43,5 +45,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

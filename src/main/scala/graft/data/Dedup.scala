@@ -52,10 +52,11 @@ object Dedup {
     * built (the concat_ws allocation was the dominant cost of the
     * string-shingle form) and downstream joins/broadcasts carry 8-byte
     * longs instead of ~60-char strings (guide §2.3: narrower keys). Tokens
-    * contain no separator (they come from a whitespace split), so the token
-    * tuple ↔ shingle string map is bijective and the hashed distinct/join
-    * semantics match the string form up to 2^-64 collisions. For operators
-    * whose OUTPUT contains the shingle itself keep the string form. */
+    * contain no separator (they come from a whitespace split), so distinct
+    * token tuples are distinct shingle strings, and the hashed distinct/join
+    * semantics equal the string form's up to 2^-64 xxhash64 collisions. For
+    * operators whose OUTPUT contains the shingle itself keep the string
+    * form. */
   def shingleHashesFromTokens(toks: Column, n: Int = 3): Column =
     when(
       size(toks) >= n,
@@ -327,8 +328,11 @@ object Dedup {
       .fanOut(train.select(col("doc_id"), col("text")))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       // hashed shingles: the n-gram string is never built and the broadcast
-      // membership probe carries longs — overlap counts are identical to
-      // the string form (see shingleHashesFromTokens)
+      // membership probe carries longs — overlap counts equal the string
+      // form's up to 2^-64 xxhash64 collisions (see shingleHashesFromTokens).
+      // Parity with the string-based DuckDB oracle holds only up to that
+      // bound: a collision would shift n_shingles/n_overlap for one doc, so
+      // check a dedup_contamination mismatch confined to one doc against it
       .select(col("doc_id"), shingleHashesFromTokens(col("toks"), n).as("sh"))
       // size must be computed BELOW the explode: an expression alongside a
       // generator lands in a Project ABOVE the Generate (ExtractGenerator),

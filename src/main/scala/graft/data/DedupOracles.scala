@@ -17,7 +17,8 @@ package graft.data
   *    near-dup tiers sit far from the threshold (catch probability ~ 1) and
   *    the corpus has no organic near-threshold pairs. A new corpus can break
   *    this row without an engine bug; recall-vs-prediction at scale is
-  *    DedupBench's job (1M docs, 0.9889 vs 0.989 analytic).
+  *    recorded in BENCH/BASELINE.md §Dedup at scale (1M docs, 0.9889 vs
+  *    0.989 analytic).
   *  - SimHash: signatures recomputed from scratch in SQL (bit-sign sums over
   *    a portable md5-based 60-bit token hash), all-pairs Hamming filter. The
   *    engine's 4-chunk pigeonhole blocking is provably lossless for

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * query side — fine when the query set is small. The IVF variant clusters
   * the corpus once and probes only `nProbe` cells per query, cutting the
   * scanned fraction to ~nProbe/nCells at a small recall cost (measured in
-  * the test suite and AnnBench).
+  * the test suite and BENCH/BASELINE.md §ANN at scale).
   *
   * The codebook has two representation regimes, dispatched on nCells:
   * up to [[LiteralCellCap]] it rides in the plan as literals (assignment is
@@ -42,9 +42,9 @@ object Similarity {
 
   /** Top-w codebook cells for `v`, ascending (negd, cell) — the native
     * expression (bit-identical scores and tie order to
-    * `slice(cellRanking(v, cents), 1, w)`, which it replaces in every hot
-    * path; see NearestCellsExpression for the parity contract and the
-    * measured 284us/row cost of the struct-array formulation). */
+    * `slice(sort_array(cellStructs(v, cents)), 1, w)`, which it replaces in
+    * every hot path; see NearestCellsExpression for the parity contract and
+    * the measured 284us/row cost of the struct-array formulation). */
   private[graft] def nearest(v: Column, cents: Seq[(Int, Seq[Double])], w: Int): Column =
     graft.extract.NearestCellsExpression.nearestCells(v, cents, w)
 
@@ -197,7 +197,8 @@ object Similarity {
     * literals instead of nCells. The corpus is never shuffled; the fine
     * table is the broadcast side. Like any multi-level IVF, cell membership
     * becomes approximate at coarse-cell boundaries — wCoarse trades that
-    * recall against scan fraction (measured in AnnBench at 4096 cells).
+    * recall against scan fraction (measured at 4096 cells, BENCH/BASELINE.md
+    * §ANN at scale).
     * Input: (vec_id, v); output: (vec_id, v, cell, negd). */
   private[graft] def broadcastCandidates(
       vdf: DataFrame,
@@ -274,12 +275,6 @@ object Similarity {
       .where(col("rk") <= nProbe)
       .select(col("vec_id"), col("v"), col("cell"))
   }
-
-  /** Ascending-sorted cell ranking — element 1 is the nearest cell (ties
-    * toward the lowest cell id), slice(.., 1, nProbe) the probe set. Only the
-    * (small) query side pays the sort; corpus assignment uses array_min. */
-  private[graft] def cellRanking(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
-    sort_array(cellStructs(v, cents))
 
   /** Exact top-k cosine neighbours for each query vector (vec_id < nQueries).
     * Output: (query_id, rank, neighbor_id) — scores are compared exactly
@@ -624,10 +619,10 @@ object Similarity {
     * corpus scans as 25 TB, and the hot loop is integer multiply-adds
     * (SIMD-friendly) instead of float ops. Ranking divides the exact
     * integer dot by the quantized norms once per pair; recall vs the exact
-    * float ranking is measured in the spec and AnnBench (quantization is
-    * the only error source — there is no candidate pruning here, and the
-    * same quantized relation drops into the IVF probe path for the
-    * pruned+compressed combination).
+    * float ranking is measured in the spec and BENCH/BASELINE.md §SQ8
+    * (quantization is the only error source — there is no candidate pruning
+    * here, and the same quantized relation drops into the IVF probe path
+    * for the pruned+compressed combination).
     *
     * Plan shape = [[bruteForceTopK]]: corpus side never shuffles (queries
     * broadcast), one window top-k per query. Output (query_id, rank,

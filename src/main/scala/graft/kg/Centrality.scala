@@ -149,9 +149,8 @@ object Centrality {
     * smallest-md5 landmarks — the relation a real deployment persists per
     * corpus epoch (landmarks × nodes, never nodes²) and serves pair
     * queries from. [[landmarkDistances]] materializes the all-pairs tail
-    * on top (fine at dictionary grain); past that, batch-query via
-    * [[landmarkDistanceQueries]]. */
-  def landmarkBfs(edges: DataFrame, landmarks: Int, maxHops: Int, numParts: Int = 0): DataFrame = {
+    * on top (fine at dictionary grain). */
+  private def landmarkBfs(edges: DataFrame, landmarks: Int, maxHops: Int, numParts: Int = 0): DataFrame = {
     require(landmarks > 0, s"landmarks must be positive: $landmarks")
     val sym = symmetrize(edges, numParts)
     val seeds = sym
@@ -163,19 +162,6 @@ object Centrality {
     sym.unpersist(false)
     dist
   }
-
-  /** Answer a BATCH of pair queries (a, b) against the persisted landmark
-    * artifact: two hash joins on node + a min partial-agg — cost scales
-    * with the query batch (× landmarks), never with nodes². Pairs with no
-    * shared in-bound landmark are absent (unreachable within the sketch's
-    * horizon). */
-  def landmarkDistanceQueries(dist: DataFrame, pairs: DataFrame): DataFrame =
-    dist
-      .select(col("s").as("l"), col("v").as("a"), col("hops").as("ha"))
-      .join(pairs, Seq("a"))
-      .join(dist.select(col("s").as("l"), col("v").as("b"), col("hops").as("hb")), Seq("l", "b"))
-      .groupBy("a", "b")
-      .agg(min(col("ha") + col("hb")).as("est_hops"))
 
   /** Exact betweenness centrality (Brandes 2001) within `maxHops`, in
     * fixed-point arithmetic so the DuckDB oracle reproduces every score

@@ -6,23 +6,19 @@ import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over an edge DataFrame — the
   * canonicalization primitive (J7 in SURVEY.md §2.6). GraphFrames-style
-  * iterative DataFrame joins, no RDDs. Two algorithms:
+  * iterative DataFrame joins, no RDDs. `run` is alternating large-star /
+  * small-star contraction (Kiveris et al., "Connected Components in
+  * MapReduce and Beyond") — it converges in O(log n) rounds REGARDLESS of
+  * graph diameter, so a pathological chain is as cheap as a star. Each
+  * round is two shuffle-aggregations + joins; hub skew (a hot concept
+  * linked from millions of surfaces) is absorbed by map-side partial MIN
+  * aggregation and AQE skew-join splitting. Min-label propagation, with
+  * O(diameter) rounds, measured slower (51 jobs vs ~35 on the dictionary
+  * graph, OPTIMIZATION_r06.md) and is not kept.
   *
-  *  - `run` (default): alternating large-star / small-star contraction
-  *    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-  *    converges in O(log n) rounds REGARDLESS of graph diameter, so a
-  *    pathological chain is as cheap as a star. Each round is two
-  *    shuffle-aggregations + joins; hub skew (a hot concept linked from
-  *    millions of surfaces) is absorbed by map-side partial MIN aggregation
-  *    and AQE skew-join splitting.
-  *  - `runPropagation`: simple min-label propagation, O(diameter) rounds —
-  *    cheaper per round for the tiny-diameter dictionary graphs the linking
-  *    step produces, with a salted two-level neighbour-min so hub updates
-  *    don't collapse into one reducer.
-  *
-  * Both return (node, component) with component = the lexicographically
-  * smallest node id in the component; `localCheckpoint` truncates lineage
-  * every round so plans don't grow with iteration count.
+  * `run` and `runIncremental` return (node, component) with component = the
+  * lexicographically smallest node id in the component; `localCheckpoint`
+  * truncates lineage every round so plans don't grow with iteration count.
   *
   * Round materialization is SERIALIZED (`MEMORY_AND_DISK_SER`) and each
   * round's cache is dropped once the next round lands: the default
@@ -64,8 +60,8 @@ object ConnectedComponents {
     * fraction of all edges serializes the relink into one straggler task.
     * Materializing the (one-row-per-key) aggregate turns the join into the
     * canonical shuffle⋈shuffle shape, and AQE then splits the hub partition
-    * (`SortMergeJoin(skew=true)` / `AQEShuffleRead coalesced and skewed`,
-    * CcBench skew leg: 3.6x faster per round at a 50%-of-edges hub). Off by
+    * (`SortMergeJoin(skew=true)` / `AQEShuffleRead coalesced and skewed`;
+    * 3.6x faster per round at a 50%-of-edges hub, PERF.md §3). Off by
     * default: dictionary-scale graphs pay the extra materialization without
     * a hub to win it back on. */
   def run(
@@ -209,65 +205,5 @@ object ConnectedComponents {
       .select(col("node"), coalesce(col("merged"), col("component")).as("component"))
     val newNodes = delta.join(ex.select("node"), Seq("node"), "left_anti")
     remapped.unionByName(newNodes.select("node", "component"))
-  }
-
-  /** Min-label propagation (O(diameter) rounds). */
-  def runPropagation(
-      spark: SparkSession,
-      edges: DataFrame,
-      maxIterations: Int = 25,
-      salt: Int = 8
-  ): DataFrame = {
-    val und = edges
-      .select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-
-    var (labels, labelIds) = cpSer(
-      spark,
-      und
-        .select(col("src").as("node"))
-        .distinct()
-        .withColumn("component", col("node")),
-      eager = false) // materialized by round 1's changed-count job
-
-    var iteration = 0
-    var converged = false
-    while (!converged && iteration < maxIterations) {
-      // neighbour min: two-level aggregation — salted partial min then final
-      // min — so a hub node's updates don't all land in one reducer.
-      val neighbourMin = und
-        .join(labels.hint("shuffle_hash"), und("src") === labels("node"))
-        .select(col("dst").as("node"), col("component"), (crc32(col("dst")) % salt).as("s"))
-        .groupBy(col("node"), col("s"))
-        .agg(min("component").as("component"))
-        .groupBy("node")
-        .agg(min("component").as("component"))
-
-      // lazy checkpoint + changed-count = ONE job per round (the count
-      // materializes the round; LocalRDDCheckpointData fills in partitions
-      // the limit short-circuits past before truncating lineage)
-      val (updated, updatedIds) = cpSer(
-        spark,
-        labels
-          .union(neighbourMin)
-          .groupBy("node")
-          .agg(min("component").as("component")),
-        eager = false)
-
-      val changed = updated
-        .join(labels.withColumnRenamed("component", "old"), "node")
-        .where(col("component") =!= col("old"))
-        .limit(1)
-        .count()
-
-      dropCached(spark, labelIds)
-      labels = updated
-      labelIds = updatedIds
-      converged = changed == 0
-      iteration += 1
-    }
-    labels
   }
 }

@@ -194,6 +194,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("compactArtifact keeps one cached copy when it re-lays out a relation") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // 8 input partitions, far above what 100 rows earn (partsFor -> 1)
+    val out = SparkEntry.compactArtifact(spark.range(0, 100, 1, 8).toDF("id"))
+    assert(out.rdd.getNumPartitions == 1)
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).size == 1)
+    assert(out.as[Long].collect().sorted.toSeq == (0L until 100L))
+  }
+
   test("triples sink MERGE-idempotency: overlapping re-runs leave exactly the distinct triple set") {
     // Cypher MERGE semantics (update_neo4j.py:107-124): re-writing a slice of
     // the input must upsert, never duplicate. The sink emulates MERGE with
